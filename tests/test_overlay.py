@@ -221,26 +221,60 @@ def test_same_layer_unordered_pairs(spark):
     assert got == {(1, 2)}
 
 
-def test_distributed_build_identical(spark):
-    """build_overlay_index(distributed=True) runs the cover/edge/rep
-    extraction executor-parallel; with an explicit ``samples`` the three
-    tables must be row-identical to the driver-loop build (the pip
-    test_pip_distributed_build_identical pattern — only where the numpy
-    runs moves)."""
-    from wayproblems_spark.operators.overlay import build_overlay_index
+def _ref_index_rows(polys):
+    """(edges, reps) a polygon index must hold, in plain Python from raw
+    rings: ``polys`` is [(poly_id, [outer, *holes])] of closed (lon, lat)
+    rings. Edges are consecutive vertex pairs over every ring; a polygon
+    whose outer lon span exceeds 180° wraps and has its negative lons
+    shifted by +360; the rep is the first outer vertex plus the outer
+    bbox."""
+    edges, reps = [], []
+    for pid, rings in polys:
+        xs = [x for x, _ in rings[0]]
+        wrap = max(xs) - min(xs) > 180.0
+        rings = [[(x + 360.0 if wrap and x < 0 else x, y) for x, y in r] for r in rings]
+        for r in rings:
+            edges += [(pid, *a, *b, wrap) for a, b in zip(r[:-1], r[1:])]
+        xs, ys = [x for x, _ in rings[0]], [y for _, y in rings[0]]
+        reps.append((pid, *rings[0][0], wrap, min(xs), max(xs), min(ys), max(ys)))
+    return sorted(edges), sorted(reps)
 
-    a = _poly_df(spark, LAYER_A, HOLES_A)
-    drv = build_overlay_index(
-        spark, a, level=9, samples=33, persist=False, distributed=False
-    )
-    dist = build_overlay_index(
-        spark, a, level=9, samples=33, persist=True, distributed=True
-    )
+
+def _bucket_bboxes(buckets):
+    """{(poly_id, xmin, xmax, ymin, ymax, wrap)} carried by bucket rows."""
+    return {
+        (r["poly_id"], r["xmin"], r["xmax"], r["ymin"], r["ymax"], r["wrap"])
+        for r in buckets.collect()
+    }
+
+
+def test_distributed_build_identical(spark):
+    """build_overlay_index runs one polygon-index kernel for one-shot
+    (``persist=False``) and prebuilt (``persist=True``) builds: with an
+    explicit ``samples`` the three tables are row-identical; edges, reps
+    and bucket bboxes equal a plain-Python reference over the raw rings
+    (holes and an antimeridian-wrapping polygon included); and with
+    ``samples=None`` both builds cover at the same density, so their
+    bucket tables are equal too."""
+    fiji = [(178.0, -20.0), (-178.0, -20.0), (-178.0, -16.0), (178.0, -16.0), (178.0, -20.0)]
+    layer = LAYER_A + [(7, fiji)]
+    a = _poly_df(spark, layer, HOLES_A)
+    one = build_overlay_index(spark, a, level=9, samples=33, persist=False)
+    pre = build_overlay_index(spark, a, level=9, samples=33, persist=True)
     for i, name in ((1, "buckets"), (2, "edges"), (3, "reps")):
-        d = sorted(map(tuple, drv[i].collect()))
-        x = sorted(map(tuple, dist[i].collect()))
-        assert d == x, f"{name} differ between driver and distributed build"
-    unpersist_overlay_index(dist)
+        o = sorted(map(tuple, one[i].collect()))
+        p = sorted(map(tuple, pre[i].collect()))
+        assert o == p, f"{name} differ between one-shot and prebuilt build"
+    ref_edges, ref_reps = _ref_index_rows(_pairs_a(layer, HOLES_A))
+    assert sorted(map(tuple, pre[2].collect())) == ref_edges
+    assert sorted(map(tuple, pre[3].collect())) == ref_reps
+    assert _bucket_bboxes(pre[1]) == {(r[0], *r[4:], r[3]) for r in ref_reps}
+    unpersist_overlay_index(pre)
+
+    one = build_overlay_index(spark, a, level=9, persist=False)
+    pre = build_overlay_index(spark, a, level=9, persist=True)
+    assert sorted(map(tuple, one[1].collect())) == sorted(map(tuple, pre[1].collect()))
+    unpersist_overlay_index(pre)
 
 
 def test_bbox_prefilter_keeps_touching_pairs(spark):

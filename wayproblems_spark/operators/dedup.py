@@ -54,8 +54,10 @@ def word_shingles(text_col, k: int = 5):
 def minhash_signature(shingles_col, num_hashes: int = 64):
     """array<long> of per-seed min hashes; empty-shingle docs get nulls.
     NOTE: higher-order array expressions are interpreted (not codegen) —
-    this form is kept for small-data/API use; the production path is the
-    exploded codegen pipeline in ``_minhash_band_buckets``."""
+    this form is kept for small-data/API use; the batch production path
+    is the codegen row pipeline ``_shingle_hash_rows`` +
+    ``_band_agg_columns``; the older exploded ``_minhash_band_buckets``
+    still serves ``streaming/dedup_stream.py``."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda seed: F.array_min(

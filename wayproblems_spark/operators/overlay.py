@@ -11,7 +11,7 @@ of its per-feature admin assignment.
 Physical plan (Spark-first, same shape as G4):
 
   1. candidate pairs by S2 cell-prefix co-bucketing: both layers get the
-     SOUND covering-cell set (``polygon_cell_buckets`` — superset of every
+     SOUND covering-cell set (``build_overlay_index`` — superset of every
      cell the polygon touches), so two intersecting polygons necessarily
      share a cover cell. Join the two small bucket tables on ``cell``
      (B-side broadcast) and ``distinct`` the (a_id, b_id) pairs — the only
@@ -57,187 +57,27 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pip import (
-    EPS,
-    _BUCKET_SCHEMA,
-    _EDGE_SCHEMA,
-    _collect_polys,
-    _normalize_rings,
-    _outer_bbox,
-    _poly_cover,
-    polygon_cell_buckets,
-    polygon_edges,
-)
+from .pip import EPS, _BUCKET, _EDGE, _REP, _index_frames
 
 __all__ = ["polygon_intersect_join", "build_overlay_index", "unpersist_overlay_index"]
 
-_REP_SCHEMA = (
-    "poly_id long, rx double, ry double, rwrap boolean, "
-    "xmin double, xmax double, ymin double, ymax double"
-)
 
-
-def _dense_samples(rings, level: int) -> int:
+def _dense_samples(bbox, level: int) -> int:
     """Cover sample count at 4× ``covering_cells``' auto density: the
     Lipschitz margin shrinks from ~4 cells to the ~2-cell floor, which
     measured ~1.5× fewer cover cells per polygon (fewer candidate pairs
     AND a smaller candidate-distinct shuffle downstream). Affordable
-    because the distributed build runs the O(samples²) numpy per-polygon
-    kernel executor-parallel (guide §2.3: shrink what feeds the
-    exchange). Keeps covering_cells' step ≤ 3° face-sliver validity
-    floor; capped at its 257 ceiling."""
-    ring = rings[0]
-    lons = [p[0] for p in ring]
-    lats = [p[1] for p in ring]
-    span = max(max(lons) - min(lons), max(lats) - min(lats))
+    because the index kernel runs the O(samples²) numpy per-polygon work
+    executor-parallel (guide §2.3: shrink what feeds the exchange). Keeps
+    covering_cells' step ≤ 3° face-sliver validity floor; capped at its
+    257 ceiling. `bbox` is the outer ring's (xmin, xmax, ymin, ymax)."""
+    xmin, xmax, ymin, ymax = bbox
+    span = max(xmax - xmin, ymax - ymin)
     n = 1 << level
     return int(min(257, max(33, span / 3.0 + 2, 26.0 * math.radians(span) * n / 2.0)))
-
-
-def _rep_bbox_row(poly_id, rings, wrap):
-    """(poly_id, rx, ry, rwrap, xmin, xmax, ymin, ymax) — first OUTER-ring
-    vertex plus the outer-ring bbox (holes lie inside it) in the same
-    normalized coordinate space as the edge table ([0,360) when wrap)."""
-    xmin, xmax, ymin, ymax = _outer_bbox(rings)
-    return (poly_id, rings[0][0][0], rings[0][0][1], wrap, xmin, xmax, ymin, ymax)
-
-
-def _rep_points(spark, polys_list) -> DataFrame:
-    """Rep + bbox table from a pre-collected polygon list, shipped as one
-    pandas frame (row-tuple createDataFrame pays a py4j round-trip per
-    row — VERDICT r4). Wrapped polygons' coords are already in [0,360)
-    because rings are normalized before this point."""
-    rows = [_rep_bbox_row(p[0], p[2], p[3]) for p in polys_list]
-    pdf = pd.DataFrame(
-        {
-            "poly_id": pd.Series([r[0] for r in rows], dtype="int64"),
-            "rx": pd.Series([r[1] for r in rows], dtype="float64"),
-            "ry": pd.Series([r[2] for r in rows], dtype="float64"),
-            "rwrap": pd.Series([r[3] for r in rows], dtype="bool"),
-            "xmin": pd.Series([r[4] for r in rows], dtype="float64"),
-            "xmax": pd.Series([r[5] for r in rows], dtype="float64"),
-            "ymin": pd.Series([r[6] for r in rows], dtype="float64"),
-            "ymax": pd.Series([r[7] for r in rows], dtype="float64"),
-        }
-    )
-    return spark.createDataFrame(pdf, _REP_SCHEMA)
-
-
-def _distributed_overlay_frames(
-    spark, polys: DataFrame, level: int, samples: int | None
-):
-    """Executor-parallel (buckets, edges, reps) extraction via three
-    ``mapInPandas`` passes over the polygon frame — the same move that
-    fixed pip's r4 build scaling (pip._distributed_index_frames): the
-    driver loop was a parallelism-independent O(polys · samples²)
-    single-core bound (measured: the whole overlay_build leg scaled at
-    0.235 — VERDICT r6 weak #1). Per-polygon kernels are shared with the
-    driver path (:func:`pip._normalize_rings` / :func:`pip._poly_cover`),
-    so for an explicit ``samples`` the tables are bit-identical
-    (test-asserted); with ``samples=None`` this path upgrades to the
-    denser :func:`_dense_samples` cover (still a sound superset — join
-    output is identical, candidate volume smaller)."""
-    import numpy as np
-
-    has_holes = "holes" in polys.columns
-    cols = ["poly_id", "kind", "ring"] + (["holes"] if has_holes else [])
-    src = polys.select(*cols)
-
-    def gen_buckets(batches):
-        for pdf in batches:
-            cells_acc, pid_acc, kind_acc = [], [], []
-            bb_acc = {k: [] for k in ("xmin", "xmax", "ymin", "ymax", "wrap")}
-            for row in pdf.itertuples(index=False):
-                rings, wrap = _normalize_rings(
-                    row.ring, row.holes if has_holes else None
-                )
-                s = _dense_samples(rings, level) if samples is None else samples
-                ids = _poly_cover(rings, wrap, level, s)
-                cells_acc.append(ids)
-                pid_acc.append(np.full(ids.size, int(row.poly_id), dtype=np.int64))
-                kind_acc.extend([row.kind] * ids.size)
-                xmin, xmax, ymin, ymax = _outer_bbox(rings)
-                bb_acc["xmin"].append(np.full(ids.size, xmin))
-                bb_acc["xmax"].append(np.full(ids.size, xmax))
-                bb_acc["ymin"].append(np.full(ids.size, ymin))
-                bb_acc["ymax"].append(np.full(ids.size, ymax))
-                bb_acc["wrap"].append(np.full(ids.size, wrap, dtype=bool))
-            cat = lambda xs, dt: (
-                np.concatenate(xs) if xs else np.array([], dtype=dt)
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": cat(cells_acc, np.int64),
-                    "poly_id": cat(pid_acc, np.int64),
-                    "kind": pd.Series(kind_acc, dtype="object"),
-                    "xmin": cat(bb_acc["xmin"], np.float64),
-                    "xmax": cat(bb_acc["xmax"], np.float64),
-                    "ymin": cat(bb_acc["ymin"], np.float64),
-                    "ymax": cat(bb_acc["ymax"], np.float64),
-                    "wrap": cat(bb_acc["wrap"], bool),
-                }
-            )
-
-    def gen_edges(batches):
-        for pdf in batches:
-            pid_acc, ax_acc, ay_acc, bx_acc, by_acc, wrap_acc = [], [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                rings, wrap = _normalize_rings(
-                    row.ring, row.holes if has_holes else None
-                )
-                for ring in rings:
-                    arr = np.asarray(ring, dtype=np.float64)
-                    m = arr.shape[0] - 1
-                    pid_acc.append(np.full(m, int(row.poly_id), dtype=np.int64))
-                    ax_acc.append(arr[:-1, 0])
-                    ay_acc.append(arr[:-1, 1])
-                    bx_acc.append(arr[1:, 0])
-                    by_acc.append(arr[1:, 1])
-                    wrap_acc.append(np.full(m, wrap, dtype=bool))
-            cat = lambda xs, dt: (
-                np.concatenate(xs) if xs else np.array([], dtype=dt)
-            )
-            yield pd.DataFrame(
-                {
-                    "poly_id": cat(pid_acc, np.int64),
-                    "ax": cat(ax_acc, np.float64),
-                    "ay": cat(ay_acc, np.float64),
-                    "bx": cat(bx_acc, np.float64),
-                    "by": cat(by_acc, np.float64),
-                    "wrap": cat(wrap_acc, bool),
-                }
-            )
-
-    def gen_reps(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                rings, wrap = _normalize_rings(
-                    row.ring, row.holes if has_holes else None
-                )
-                rows.append(_rep_bbox_row(int(row.poly_id), rings, wrap))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "poly_id", "rx", "ry", "rwrap", "xmin", "xmax", "ymin", "ymax",
-                ],
-            ).astype(
-                {
-                    "poly_id": "int64", "rx": "float64", "ry": "float64",
-                    "rwrap": "bool", "xmin": "float64", "xmax": "float64",
-                    "ymin": "float64", "ymax": "float64",
-                }
-            )
-
-    return (
-        src.mapInPandas(gen_buckets, _BUCKET_SCHEMA),
-        src.mapInPandas(gen_edges, _EDGE_SCHEMA),
-        src.mapInPandas(gen_reps, _REP_SCHEMA),
-    )
 
 
 def build_overlay_index(
@@ -246,40 +86,27 @@ def build_overlay_index(
     level: int = 9,
     samples: int | None = None,
     persist: bool = True,
-    distributed: bool | None = None,
 ):
-    """One layer's overlay-side tables: (level, buckets, edges, reps).
+    """One layer's overlay-side tables: (level, buckets, edges, reps),
+    built by the polygon-index kernel shared with PIP
+    (``pip._index_frames``). ``samples=None`` covers each polygon at the
+    :func:`_dense_samples` density, on one-shot and prebuilt builds
+    alike, so both produce the same bucket table.
 
     Build once per layer and pass as ``prebuilt_a``/``prebuilt_b`` when
     the same layer participates in several joins (or in streaming
-    batches) — the cover construction is the driver-side constant that
-    poisoned the r4 pip scaling leg until it was split out the same way.
-
-    ``distributed`` (default auto): persisted DataFrame builds run the
-    per-polygon cover/edge/rep kernels executor-parallel via
-    ``mapInPandas`` — the r6 driver loop was a parallelism-independent
-    O(polys · samples²) single-core bound (leg scaling eff 0.235) and is
-    a scale-killer at 10⁶-polygon layers. One-shot (``persist=False``)
-    and pre-collected-list builds keep the driver loop: their layers are
-    small and an unpersisted mapInPandas frame would re-run its Python
-    pass on every downstream broadcast."""
-    if distributed is None:
-        distributed = isinstance(polys, DataFrame) and persist
-    if distributed:
-        if not isinstance(polys, DataFrame):
-            raise TypeError("distributed build requires a polygon DataFrame")
-        buckets, edges, reps = _distributed_overlay_frames(
-            spark, polys, level, samples
-        )
-    else:
-        plist = _collect_polys(polys) if isinstance(polys, DataFrame) else polys
-        buckets = polygon_cell_buckets(spark, plist, level, samples)
-        edges = polygon_edges(spark, plist)
-        reps = _rep_points(spark, plist)
-    if persist:
-        buckets = buckets.persist()
-        edges = edges.persist()
-        reps = reps.persist()
+    batches). ``persist=True`` persists and materializes the three
+    frames; free them with :func:`unpersist_overlay_index`.
+    ``persist=False`` is the one-shot form :func:`polygon_intersect_join`
+    uses when given polygon frames."""
+    buckets, edges, reps = _index_frames(
+        spark,
+        polys,
+        level,
+        _dense_samples if samples is None else samples,
+        persist,
+        (_BUCKET, _EDGE, _REP),
+    )
     return level, buckets, edges, reps
 
 

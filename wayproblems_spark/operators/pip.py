@@ -7,13 +7,11 @@ the point side (admin/landuse boundaries vs billions of points), so we
      (STRtree-analog bucketing); build TWO small broadcast tables —
      (cell, poly_id, kind) buckets and a flat (poly_id, edge) table —
      instead of duplicating the full ring array into every bucket row.
-     The cover/edge extraction runs either on the driver (default —
-     right for the reference's 10^2..10^4 admin layers) or
-     executor-parallel via ``mapInPandas`` (``distributed=True`` — for
-     polygon layers past the driver's single-core budget, e.g. 10^5+
-     per-building footprints); both paths share the same per-polygon
-     numpy kernel, so the resulting tables are identical
-     (fingerprint-asserted in tests),
+     One batch kernel (:func:`_index_batch`) turns a pandas batch of
+     polygons into bucket, edge and representative-vertex rows; it is
+     shared with the overlay operator (:func:`_index_frames`) and runs
+     executor-parallel through ``mapInPandas`` for a prebuilt index, or
+     over one local pandas frame for a one-shot join,
   2. **broadcast**-join buckets on the point's cell — no shuffle of the
      big side — then broadcast-join the candidate (point, poly) pairs
      against the edge table on poly_id, and
@@ -40,6 +38,8 @@ bit-identical (q15 oracle stays hash-exact).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,14 +58,30 @@ _BUCKET_SCHEMA = (
     "xmin double, xmax double, ymin double, ymax double, wrap boolean"
 )
 _EDGE_SCHEMA = "poly_id long, ax double, ay double, bx double, by double, wrap boolean"
+# one row per polygon: its first OUTER-ring vertex (the overlay parity
+# probe) and outer-ring bbox, in the edge table's normalized coordinates
+_REP_SCHEMA = (
+    "poly_id long, rx double, ry double, rwrap boolean, "
+    "xmin double, xmax double, ymin double, ymax double"
+)
+# the kernel's output: bucket, edge and rep rows in one frame, told apart
+# by `t`; every row carries its polygon's bbox and wrap flag, rep rows
+# carry the first outer vertex in ax/ay (renamed by `_RENAME` when the rep
+# table is split out), and columns a row type does not use hold zeros
+_BUCKET, _EDGE, _REP = 0, 1, 2
+_SCHEMAS = (_BUCKET_SCHEMA, _EDGE_SCHEMA, _REP_SCHEMA)
+_INDEX_SCHEMA = (
+    "t byte, cell long, poly_id long, kind string, "
+    "ax double, ay double, bx double, by double, "
+    "xmin double, xmax double, ymin double, ymax double, wrap boolean"
+)
+_RENAME = {"rx": "ax", "ry": "ay", "rwrap": "wrap"}
 
 
 def _normalize_rings(ring, holes):
-    """([outer_ring, *hole_rings], wrap) from raw row values — the ONE
-    per-polygon normalization kernel, shared by the driver collect and
-    the distributed mapInPandas build so both produce bit-identical
-    tables. Rings are [(lon, lat), ...], closed (first == last); `ring`
-    elements may be Rows or dicts with lon/lat keys.
+    """([outer_ring, *hole_rings], wrap) from raw row values. Rings are
+    [(lon, lat), ...], closed (first == last); `ring` elements may be
+    Rows or dicts with lon/lat keys.
 
     Holes: hole rings contribute their edges to the same even-odd parity
     count, which excludes hole interiors with no extra logic; a point
@@ -93,203 +109,114 @@ def _normalize_rings(ring, holes):
     return rings, wrap
 
 
-def _outer_bbox(rings):
-    """(xmin, xmax, ymin, ymax) of the OUTER ring in the polygon's
-    normalized coordinate space (hole rings lie inside it)."""
-    ring = rings[0]
-    xs = [p[0] for p in ring]
-    ys = [p[1] for p in ring]
-    return min(xs), max(xs), min(ys), max(ys)
+def _index_batch(pdf: pd.DataFrame, level: int, samples) -> pd.DataFrame:
+    """The polygon-index kernel: a pandas batch of (poly_id, kind, ring[,
+    holes]) → its bucket, edge and rep rows as one `_INDEX_SCHEMA` frame.
 
-
-def _poly_cover(rings, wrap, level: int, samples: int | None):
-    """int64 covering-cell ids for one normalized polygon (bbox of the
-    outer ring; holes lie inside it)."""
-    import numpy as np
-
-    ring = rings[0]
-    lons = [p[0] for p in ring]
-    lats = [p[1] for p in ring]
-    lon0, lon1 = min(lons), max(lons)
-    if wrap:
-        # ring lons live in shifted [0, 360) space; map the bbox back
-        # to a lon0 > lon1 wrap range, which covering_cells splits at
-        # ±180 and unions
-        lon0, lon1 = lon0, lon1 - 360.0
-    return covering_cells(
-        lon0, min(lats), lon1, max(lats), level, samples=samples
-    ).astype(np.int64)
-
-
-def _collect_polys(polys: DataFrame):
-    """[(poly_id, kind, [outer_ring, *hole_rings], wrap)] — one driver
-    collect, reused by both broadcast tables (assumption: 10^2..10^5
-    polygons; past that, use ``build_pip_index(distributed=True)``)."""
-    has_holes = "holes" in polys.columns
-    out = []
-    for r in polys.collect():
-        rings, wrap = _normalize_rings(r["ring"], r["holes"] if has_holes else None)
-        out.append((r["poly_id"], r["kind"], rings, wrap))
-    return out
-
-
-def polygon_cell_buckets(spark, polys, level: int, samples: int | None = None) -> DataFrame:
-    """(cell, poly_id, kind) — driver-computed covering cells, no ring
-    payload (rings live in the separate edge table). `polys` may be a
-    DataFrame or the pre-collected list from :func:`_collect_polys`.
-
-    `samples` tunes the cover's sample-grid density: denser sampling
-    shrinks the Lipschitz margin (fewer superset cells per polygon →
-    fewer candidate pairs downstream) at a driver-side cost of
-    O(polys · samples²) numpy work — worth it when the point side is
-    large relative to the polygon count."""
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(polys, DataFrame):
-        polys = _collect_polys(polys)
-    # accumulate per-poly covers as numpy blocks and ship ONE pandas frame
-    # through Arrow — a row-tuple createDataFrame pays a py4j upload per
-    # row, which at ~10^5 bucket rows is a parallelism-independent driver
-    # constant big enough to dominate the operator at high core counts
-    cells_acc, pid_acc, kind_acc = [], [], []
-    bb_acc = {k: [] for k in ("xmin", "xmax", "ymin", "ymax", "wrap")}
-    for poly_id, kind, rings, wrap in polys:
-        ids = _poly_cover(rings, wrap, level, samples)
-        cells_acc.append(ids)
-        pid_acc.append(np.full(ids.size, poly_id, dtype=np.int64))
-        kind_acc.extend([kind] * ids.size)
-        xmin, xmax, ymin, ymax = _outer_bbox(rings)
-        bb_acc["xmin"].append(np.full(ids.size, xmin))
-        bb_acc["xmax"].append(np.full(ids.size, xmax))
-        bb_acc["ymin"].append(np.full(ids.size, ymin))
-        bb_acc["ymax"].append(np.full(ids.size, ymax))
-        bb_acc["wrap"].append(np.full(ids.size, wrap, dtype=bool))
-    cat = lambda xs, dt: np.concatenate(xs) if xs else np.array([], dtype=dt)
-    pdf = pd.DataFrame(
+    Per polygon: normalize the rings once, cover the outer-ring bbox with
+    level-`level` cells (sound superset; holes lie inside the bbox), and
+    take every ring's edges as consecutive vertex pairs (rings are closed,
+    so edges = zip(ring[:-1], ring[1:])). `samples` is the cover's
+    sample-grid density: an int, None for ``covering_cells``' auto
+    density, or a per-polygon rule ``samples(bbox, level)`` with bbox =
+    (xmin, xmax, ymin, ymax) in normalized coordinates. Denser sampling
+    shrinks the Lipschitz margin (fewer superset cells per polygon, fewer
+    candidate pairs downstream) at O(samples²) numpy work per polygon."""
+    holes = pdf["holes"] if "holes" in pdf.columns else [None] * len(pdf)
+    tags, cells, geo, per_poly = [], [], [], []
+    for ring, hs in zip(pdf["ring"], holes):
+        rings, wrap = _normalize_rings(ring, hs)
+        arrs = [np.asarray(r, dtype=np.float64) for r in rings]
+        (xmin, ymin), (xmax, ymax) = arrs[0].min(axis=0), arrs[0].max(axis=0)
+        bbox = (xmin, xmax, ymin, ymax)
+        s = samples(bbox, level) if callable(samples) else samples
+        # a wrapped polygon's bbox lives in shifted [0, 360) space; map it
+        # back to a lon0 > lon1 range, which covering_cells splits at ±180
+        ids = covering_cells(
+            xmin, ymin, xmax - 360.0 if wrap else xmax, ymax, level, samples=s
+        ).astype(np.int64)
+        ab = np.hstack(
+            [np.concatenate([r[:-1] for r in arrs]), np.concatenate([r[1:] for r in arrs])]
+        )
+        # rows: buckets, then edges, then the rep (first edge's start = the
+        # first outer vertex)
+        tags.append(np.repeat(np.int8([_BUCKET, _EDGE, _REP]), [ids.size, len(ab), 1]))
+        cells.append(np.concatenate([ids, np.zeros(len(ab) + 1, np.int64)]))
+        geo.append(np.vstack([np.zeros((ids.size, 4)), ab, ab[:1]]))
+        per_poly.append((*bbox, wrap))
+    n = [t.size for t in tags]
+    geo = np.vstack(geo) if geo else np.zeros((0, 4))
+    per_poly = np.array(per_poly, dtype=np.float64).reshape(-1, 5)
+    return pd.DataFrame(
         {
-            "cell": cat(cells_acc, np.int64),
-            "poly_id": cat(pid_acc, np.int64),
-            "kind": pd.Series(kind_acc, dtype="object"),
-            "xmin": cat(bb_acc["xmin"], np.float64),
-            "xmax": cat(bb_acc["xmax"], np.float64),
-            "ymin": cat(bb_acc["ymin"], np.float64),
-            "ymax": cat(bb_acc["ymax"], np.float64),
-            "wrap": cat(bb_acc["wrap"], bool),
+            "t": np.concatenate(tags) if tags else np.zeros(0, np.int8),
+            "cell": np.concatenate(cells) if cells else np.zeros(0, np.int64),
+            "poly_id": np.repeat(pdf["poly_id"].to_numpy(np.int64), n),
+            "kind": np.repeat(pdf["kind"].to_numpy(object), n),
+            "ax": geo[:, 0], "ay": geo[:, 1], "bx": geo[:, 2], "by": geo[:, 3],
+            "xmin": np.repeat(per_poly[:, 0], n),
+            "xmax": np.repeat(per_poly[:, 1], n),
+            "ymin": np.repeat(per_poly[:, 2], n),
+            "ymax": np.repeat(per_poly[:, 3], n),
+            "wrap": np.repeat(per_poly[:, 4].astype(bool), n),
         }
     )
-    return spark.createDataFrame(pdf, _BUCKET_SCHEMA)
 
 
-def polygon_edges(spark, polys) -> DataFrame:
-    """(poly_id, ax, ay, bx, by, wrap) — one row per edge of every ring
-    (outer + holes; x=lon, y=lat; antimeridian polygons carry shifted
-    [0,360) lons + wrap=true).
+def _index_frames(spark, polys: DataFrame, level: int, samples, persist: bool, tables):
+    """The polygon-layer tables named by `tables` (tags from _BUCKET,
+    _EDGE, _REP, each in its `_SCHEMAS` shape), split out of ONE pass of
+    :func:`_index_batch` over `polys` — the single builder behind
+    :func:`build_pip_index` and ``overlay.build_overlay_index``.
 
-    Edges are consecutive ring vertex pairs; rings are closed (first ==
-    last) so edges = zip(ring[:-1], ring[1:]).
-    """
-    if isinstance(polys, DataFrame):
-        polys = _collect_polys(polys)
-    out = []
-    for poly_id, _kind, rings, wrap in polys:
-        for ring in rings:
-            for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
-                out.append((poly_id, ax, ay, bx, by, wrap))
-    return spark.createDataFrame(out, _EDGE_SCHEMA)
-
-
-def _distributed_index_frames(spark, polys: DataFrame, level: int, samples: int | None):
-    """Executor-parallel cover/edge extraction via two ``mapInPandas``
-    passes over the polygon frame (the layer scans twice — it is the
-    small side). Each worker batch runs the SAME per-polygon kernel as
-    the driver path (:func:`_normalize_rings` / :func:`_poly_cover`), so
-    the resulting tables are identical; only where the numpy runs moves.
-    Removes the driver's O(polys · samples²) single-core bound — the
-    right shape when the polygon layer is 10^5+ rows (per-building
-    footprints), while the OUTPUT tables stay broadcast-sized."""
-    import numpy as np
-    import pandas as pd
-
-    has_holes = "holes" in polys.columns
-    cols = ["poly_id", "kind", "ring"] + (["holes"] if has_holes else [])
+    ``persist=True``: the kernel runs executor-parallel via
+    ``mapInPandas``; its output is cached just long enough to materialize
+    each persisted table from it, so the Python pass runs once however
+    many tables are taken. ``persist=False`` (one-shot joins): the same
+    kernel runs on the driver over ``polys.toPandas()`` and the tables
+    are projections of one local relation, so each downstream use of a
+    table rescans data instead of re-running an unpersisted Python pass."""
+    cols = ["poly_id", "kind", "ring"] + (["holes"] if "holes" in polys.columns else [])
     src = polys.select(*cols)
-
-    def gen_buckets(batches):
-        for pdf in batches:
-            cells_acc, pid_acc, kind_acc = [], [], []
-            bb_acc = {k: [] for k in ("xmin", "xmax", "ymin", "ymax", "wrap")}
-            for row in pdf.itertuples(index=False):
-                rings, wrap = _normalize_rings(
-                    row.ring, row.holes if has_holes else None
-                )
-                ids = _poly_cover(rings, wrap, level, samples)
-                cells_acc.append(ids)
-                pid_acc.append(np.full(ids.size, int(row.poly_id), dtype=np.int64))
-                kind_acc.extend([row.kind] * ids.size)
-                xmin, xmax, ymin, ymax = _outer_bbox(rings)
-                bb_acc["xmin"].append(np.full(ids.size, xmin))
-                bb_acc["xmax"].append(np.full(ids.size, xmax))
-                bb_acc["ymin"].append(np.full(ids.size, ymin))
-                bb_acc["ymax"].append(np.full(ids.size, ymax))
-                bb_acc["wrap"].append(np.full(ids.size, wrap, dtype=bool))
-            cat = lambda xs, dt: (
-                np.concatenate(xs) if xs else np.array([], dtype=dt)
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": cat(cells_acc, np.int64),
-                    "poly_id": cat(pid_acc, np.int64),
-                    "kind": pd.Series(kind_acc, dtype="object"),
-                    "xmin": cat(bb_acc["xmin"], np.float64),
-                    "xmax": cat(bb_acc["xmax"], np.float64),
-                    "ymin": cat(bb_acc["ymin"], np.float64),
-                    "ymax": cat(bb_acc["ymax"], np.float64),
-                    "wrap": cat(bb_acc["wrap"], bool),
-                }
-            )
-
-    def gen_edges(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rings, wrap = _normalize_rings(
-                    row.ring, row.holes if has_holes else None
-                )
-                for ring in rings:
-                    for (ax, ay), (bx, by) in zip(ring[:-1], ring[1:]):
-                        out.append((int(row.poly_id), ax, ay, bx, by, wrap))
-            yield pd.DataFrame(
-                out, columns=["poly_id", "ax", "ay", "bx", "by", "wrap"]
-            ).astype(
-                {
-                    "poly_id": "int64",
-                    "ax": "float64",
-                    "ay": "float64",
-                    "bx": "float64",
-                    "by": "float64",
-                    "wrap": "bool",
-                }
-            )
-
-    return src.mapInPandas(gen_buckets, _BUCKET_SCHEMA), src.mapInPandas(
-        gen_edges, _EDGE_SCHEMA
-    )
+    if persist:
+        base = src.mapInPandas(
+            lambda batches: (_index_batch(b, level, samples) for b in batches),
+            _INDEX_SCHEMA,
+        ).persist()
+    else:
+        base = spark.createDataFrame(
+            _index_batch(src.toPandas(), level, samples), _INDEX_SCHEMA
+        )
+    frames = [
+        base.filter(F.col("t") == t).select(
+            *[
+                F.col(_RENAME.get(c, c)).alias(c)
+                for c in (f.split()[0] for f in _SCHEMAS[t].split(","))
+            ]
+        )
+        for t in tables
+    ]
+    if persist:
+        frames = [f.persist() for f in frames]
+        for f in frames:
+            f.count()
+        base.unpersist()
+    return frames
 
 
 def build_pip_index(
     spark,
-    polys,
+    polys: DataFrame,
     level: int = 10,
     samples: int | None = None,
-    distributed: bool | None = None,
     persist: bool = True,
 ):
     """(level, buckets, edges) — the reusable static side of the PIP
-    operator (cell covers + flat edge table, both broadcast-sized).
-    Build ONCE and pass as ``prebuilt=`` to :func:`point_in_polygon` when
-    many point batches query the same polygon layer — the production
-    shape (the layer is static; points stream), same pattern as
+    operator (cell covers + flat edge table, both broadcast-sized), built
+    by the shared polygon-index kernel (:func:`_index_frames`). Build
+    ONCE and pass as ``prebuilt=`` to :func:`point_in_polygon` when many
+    point batches query the same polygon layer — the production shape
+    (the layer is static; points stream), same pattern as
     knn.build_knn_index (which likewise packs its build level into the
     returned tuple so a caller cannot query at a mismatched level) and
     similarity.build_ivf_index.
@@ -299,32 +226,10 @@ def build_pip_index(
     construction once, not per batch (VERDICT r4 "wrong #2": the
     per-call re-broadcast was a ~1.3 s parallelism-independent floor on
     the pip_contains leg). The caller owns the cache entries — call
-    ``unpersist()`` on both frames when done with the index.
-
-    ``distributed=True`` runs the per-polygon cover/edge extraction
-    executor-parallel (mapInPandas) instead of in a driver loop —
-    identical output tables (fingerprint-asserted in tests). Default
-    auto (``None``): persisted DataFrame builds distribute — the driver
-    loop is a parallelism-independent O(polys · samples²) single-core
-    bound (at dense sampling it was most of the r6 pip_build leg) —
-    while one-shot (``persist=False``) and pre-collected-list builds
-    keep the driver loop, since an unpersisted mapInPandas frame would
-    re-run its Python pass on every downstream broadcast."""
-    if distributed is None:
-        distributed = isinstance(polys, DataFrame) and persist
-    if distributed:
-        if not isinstance(polys, DataFrame):
-            raise TypeError("distributed build requires a polygon DataFrame")
-        buckets, edges = _distributed_index_frames(spark, polys, level, samples)
-    else:
-        rows = _collect_polys(polys) if isinstance(polys, DataFrame) else polys
-        buckets = polygon_cell_buckets(spark, rows, level, samples=samples)
-        edges = polygon_edges(spark, rows)
-    if persist:
-        buckets = buckets.persist()
-        edges = edges.persist()
-        buckets.count()
-        edges.count()
+    :func:`unpersist_pip_index` when done with the index.
+    ``persist=False`` is the one-shot form :func:`point_in_polygon` uses
+    when given a polygon frame."""
+    buckets, edges = _index_frames(spark, polys, level, samples, persist, (_BUCKET, _EDGE))
     return level, buckets, edges
 
 

@@ -275,6 +275,11 @@ def build_ivf_index(
     scale: survives executor loss, frees memory, and the per-query-batch
     nprobe bucket join reads only matching buckets with no shuffle of the
     corpus side).
+
+    ``id_col`` must be UNIQUE per corpus vector: :func:`ivf_topk` ranks
+    (query, id) candidates without deduplicating them, so a repeated id
+    could occupy several top-k ranks. Deduplicate upstream if the corpus
+    can repeat ids.
     """
     spark = corpus.sparkSession
     if centroids is None:
@@ -318,7 +323,13 @@ def ivf_topk(
     ``prebuilt=build_ivf_index(...)`` to also skip the per-call corpus
     assignment (the production pattern: build once, reuse across query
     batches — per-batch cost is then the nprobe bucket join + re-rank
-    only)."""
+    only).
+
+    Corpus ``id_col`` values must be UNIQUE (in ``prebuilt``'s assigned
+    frame too): candidates are not deduplicated before the top-k window,
+    because with unique ids each (query, id) pair meets on exactly one
+    probe list; a duplicated id would take several of a query's k ranks
+    (the same caveat as point_in_polygon's ``id_col``)."""
     from pyspark.sql.window import Window
 
     spark = corpus.sparkSession

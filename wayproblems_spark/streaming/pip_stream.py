@@ -3,10 +3,11 @@ Structured-Streaming source) against a STATIC polygon layer.
 
 Shape: same foreachBatch pattern as :mod:`.knn_stream` — the static side
 (cell-bucket + edge broadcast tables) is built ONCE with
-``build_pip_index`` (persisted + materialized, so no per-batch broadcast
-rebuild — VERDICT r4 "wrong #2") and captured by the batch closure;
-every micro-batch then pays only for its own points: one broadcast
-bucket join, one broadcast edge join, one codegen parity aggregate.
+``build_pip_index`` (the polygon-index kernel run executor-parallel,
+persisted + materialized, so no per-batch broadcast rebuild) and
+captured by the batch closure; every micro-batch then pays only for its
+own points: one broadcast bucket join, one broadcast edge join, one
+codegen parity aggregate.
 Unlike kNN there is no per-batch internal persist to track — the PIP
 operator is a single stateless plan — so the only cache entries alive
 across the stream are the two index frames.
@@ -35,7 +36,6 @@ def pip_foreach_batch(
     polys: DataFrame,
     level: int = 10,
     samples: int | None = None,
-    distributed: bool = False,
 ) -> Callable:
     """Returns an on-batch callable for ``writeStream.foreachBatch`` that
     maps a micro-batch of points(point_id, lat, lon) to containment rows
@@ -49,9 +49,7 @@ def pip_foreach_batch(
         fb.sink = exactly_once_parquet_sink(out_dir)
         stream.writeStream.foreachBatch(fb).start()
     """
-    prebuilt = build_pip_index(
-        spark, polys, level, samples=samples, distributed=distributed
-    )
+    prebuilt = build_pip_index(spark, polys, level, samples=samples)
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         res = point_in_polygon(spark, batch_df, None, prebuilt=prebuilt)
